@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 
@@ -16,39 +18,22 @@ import java.nio.file.{Files, Paths}
   * output row/column — `count()` would let Catalyst prune the
   * projections we mean to measure.
   *
-  * Contract hardening (round-2): a failing query is recorded as -1 with
-  * its error in an `errors` map (never silently reported as a healthy
-  * near-zero time), and the full JSON line is also written to
-  * target/bench.json so the driver's stdout tail window can't clip it.
+  * A failing query is recorded as -1 with its error in an `errors` map
+  * (never silently reported as a healthy near-zero time).
   *
-  * Noise correction (round-9, floor-gated round-10): when the sweep's
-  * sentinel drift exceeds 1.5 OR the run's sentinel baseline sits >1.5×
-  * above the historical floor (a sustained slow phase keeps drift quiet
-  * while every median runs slow — r09's 4.8× phantom), queries whose
-  * effective noise ratio max(segment drift, floor ratio) exceeds 1.5
-  * AND that moved >1.5× against a committed quiet reference are
-  * automatically RE-MEDIANED; if the box is still slow at re-run time
-  * (concurrent sentinel vs the FLOOR > 1.5) the re-run median is
-  * normalized by that ratio and the entry is flagged in `suspects` as
-  * an estimate. Anything still >1.5× off the quiet reference after
-  * correction is also flagged `suspect` — tools/bench_diff.py treats
-  * suspect movers as advisory, never regressions. The reference is matched BY SCALE (BENCH_LOCAL.json
-  * for sf0.001 local loops, bench-results/BENCH_LOCAL_sf0.1.json for
-  * the driver's sf0.1 runs — cross-scale ratios are meaningless); with
-  * no same-scale reference, noisy-segment queries alone are suspects,
-  * capped at [[BenchNoise.ReMedianCap]] so a fully contended box can't
-  * double the sweep. The reported `queries` map carries the corrected
-  * values (so tools/bench_diff.py consumes them directly) and each
-  * correction is itemized under `remedianed`. Round-8's driver sweep
-  * ran at drift 1.81 and produced a dozen phantom 1.2–1.5×
-  * "regressions" that cost a full quiet-box cross-check — this closes
-  * that loop in-sweep. Decision logic is pure and unit-pinned
-  * (BenchNoiseSpec).
+  * Contention is flagged, not corrected: three sentinel kernels (cpu,
+  * shuffle, scan) are timed before the sweep and re-timed through it,
+  * and each kernel's baseline is compared with the robust floor of its
+  * history CSV. The reported medians are always the raw ones; a sweep
+  * whose sentinels drifted or ran slow says `"contended": true`, next to
+  * `sentinel_drift` and `floor_ratio`.
   *
-  * The tail-safe digest line is driver-capped (~2000 chars of stdout
-  * tail), so it cannot carry all queries; the FULL per-query map is
-  * always written to bench-results/BENCH_FULL.json (committed per
-  * round) and the digest's `full_map` key documents that path.
+  * Outputs: the full line (every query's median, the errors and the
+  * sentinel record) goes to target/bench.json and
+  * bench-results/BENCH_FULL.json and to stdout. Callers that keep only
+  * the last ~2000 chars of stdout get a byte-budgeted digest as the
+  * LAST line ([[BenchNoise.digest]]); its `full_map` key names the full
+  * file.
   */
 object Bench {
   private def materialize(df: DataFrame): Unit =
@@ -161,16 +146,6 @@ object Bench {
   // made it a ~2 s query, so it gets the same median-of-repeats
   // treatment as every other analytic query
 
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -218,15 +193,13 @@ object Bench {
     // included via the file append above — do NOT add it again; the
     // double-count biased p10 toward the current reading), not the raw
     // min: this box's history carries one-off fast flukes (0.190 vs
-    // p10 0.236) that would read a quiet run as 1.7× "slow" and
-    // trigger phantom normalization.
-    val kernelFloors: IndexedSeq[Double] = histPaths.zipWithIndex.map { case (p, _) =>
+    // p10 0.236) that would read a quiet run as 1.7× "slow".
+    val kernelFloors: IndexedSeq[Double] = histPaths.map { p =>
       BenchNoise.robustFloor(
         scala.jdk.CollectionConverters
           .IteratorHasAsScala(Files.lines(p).iterator).asScala.drop(1)
           .flatMap(_.split(",").lift(1)).map(_.toDouble).toSeq)
-    }.toIndexedSeq
-    val bestBaseline = kernelFloors(0) // cpu kernel, JSON compat
+    }
     // One checkpoint = min-of-2 of ONE kernel (rotating), expressed as
     // a DRIFT RATIO vs that kernel's baseline — the series is
     // ratio-valued so heterogeneous kernels share one timeline.
@@ -237,14 +210,6 @@ object Bench {
       val m = sentinelKernelMin2(spark, k)
       if (sentinelBaselines(k) > 0) m / sentinelBaselines(k) else 1.0
     }
-    // Floor-relative contention reading RIGHT NOW across ALL kernels —
-    // used by the re-median pass to normalize estimates; max over
-    // kernels so an I/O-only phase can't hide behind a quiet cpu.
-    def floorRatioNow(): Double =
-      (0 until sentinelKernelNames.size).map { k =>
-        val m = sentinelKernelMin2(spark, k)
-        if (kernelFloors(k) > 0) m / kernelFloors(k) else 1.0
-      }.max
     val sentinelSeries = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val results = names.zipWithIndex.map { case (n, i) =>
@@ -274,477 +239,73 @@ object Bench {
       }.max
     val contended = maxDrift > 2.0 || baselineVsBest > 2.0
 
-    // ---- in-sweep noise correction ----
-    // Quiet reference medians, matched BY SCALE: the driver benches at
-    // sf0.1 while local sweeps record sf0.001 — ratios across scales
-    // are meaningless, so a candidate reference is only used when its
-    // recorded sf basename equals this run's.
-    // Round-11: the preferred reference is the per-query BEST-KNOWN
-    // floor map (min-of-medians across every recorded same-scale
-    // sweep, maintained monotonically below) — a single "blessed"
-    // quiet record can itself have been captured in a moderate slow
-    // phase its sentinel missed (the r10 sf0.1 record ran ~1.14× slow
-    // and read worse than the driver sweep for dozens of queries).
-    val sfBase = new java.io.File(sfDir).getName
-    val bestPath = Paths.get(s"bench-results/BENCH_BEST_$sfBase.json")
-    val reference: Map[String, Double] =
-      Seq(bestPath.toString, "BENCH_LOCAL.json",
-          s"bench-results/BENCH_LOCAL_$sfBase.json")
-        .map(Paths.get(_)).filter(Files.exists(_))
-        .map(p => BenchNoise.parseReference(Files.readString(p)))
-        .collectFirst { case (qs, sf)
-          if qs.nonEmpty && new java.io.File(sf).getName == sfBase => qs }
-        .getOrElse(Map.empty)
-    // series values are ratios already — anchor baseline is 1.0
-    val checkpoints = BenchNoise.checkpointRatios(sentinelSeries.toSeq, 1.0)
-    val reMedianNote = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Suspects: timed in a noisy segment AND (moved >1.5× against a
-    // same-scale reference — the bounded, preferred rule — or, with no
-    // usable reference, noisy-segment alone, CAPPED so a fully
-    // contended box can't double the sweep re-running everything).
-    //
-    // Round-10: the correction also fires when the sweep's BASELINE
-    // itself sits >1.5× above the historical sentinel floor — a
-    // sustained slow phase spanning the whole sweep keeps within-run
-    // drift quiet (r09 shipped a 4.8× phantom at max_drift 1.24, floor
-    // ratio 3.30), so every query's effective noise ratio is
-    // max(segment drift, floor ratio), and the re-run's normalization
-    // references the FLOOR, not this run's possibly-slow baseline.
-    var suspectBudget = BenchNoise.ReMedianCap
-    val sweepNoisy = BenchNoise.sweepNoisy(maxDrift, baselineVsBest)
-    // queries whose corrected value is a floor-normalized ESTIMATE
-    // (box still slow at re-run time) — flagged suspect downstream
-    val normalized = scala.collection.mutable.LinkedHashSet[String]()
-    val corrected: Seq[(String, Double)] =
-      if (!sweepNoisy) results
-      else results.zipWithIndex.map { case ((n, v), idx) =>
-        val drift = math.max(BenchNoise.segDrift(checkpoints, idx), baselineVsBest)
-        val suspicious = v >= 0 && !runOnce(n) &&
-          BenchNoise.suspicious(v, drift, reference.get(n), reference.nonEmpty) &&
-          { val ok = suspectBudget > 0; if (ok) suspectBudget -= 1; ok }
-        if (!suspicious) n -> v
-        else {
-          // measure how noisy the box is RIGHT NOW — against the
-          // historical floor, so a sustained slow phase reads as
-          // contention here even though this run's baseline absorbed it
-          val concurrent = floorRatioNow()
-          val times = (1 to repeats).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try {
-              materialize(SparkEntry.queries(n)(spark, sfDir))
-              Some((System.nanoTime() - t0) / 1e9)
-            } catch { case _: Throwable => None }
-          }
-          if (times.isEmpty) n -> v
-          else {
-            val med = times.sorted.apply(times.size / 2)
-            val est = concurrent > 1.5
-            val fin = if (est) med / concurrent else med
-            if (est) normalized += n
-            reMedianNote(n) =
-              f"""{"orig":$v%.3f,"seg_drift":$drift%.2f,"re_floor":$concurrent%.2f,"normalized":$est,"final":$fin%.3f}"""
-            n -> fin
-          }
-        }
-      }
-    if (suspectBudget == 0)
-      System.err.println(s"[bench] re-median cap (${BenchNoise.ReMedianCap}) hit — " +
-        "remaining noisy-segment queries keep their original medians")
-    val finalResults = corrected
-    // Explicit per-query suspect flags (tools/bench_diff.py honors
-    // them): floor-normalized estimates, plus anything in a noisy
-    // sweep whose FINAL value still deviates >1.5× from the same-scale
-    // quiet reference (cap-hit, runOnce, or a failed re-run). A sweep
-    // may not silently ship phantom regressions as healthy medians.
-    val suspects: Seq[String] =
-      if (!sweepNoisy) normalized.toSeq
-      else (normalized ++ finalResults.collect {
-        case (n, v) if v >= 0 && BenchNoise.stillSuspect(v, reference.get(n)) => n
-      }).toSeq.distinct.sorted
-    val sentinelJson = {
-      // series entries are [query_index, drift_ratio] — ratio vs the
-      // rotating kernel's own baseline (kernel = index order cpu,
-      // shuffle, scan, repeating)
-      val series = sentinelSeries
-        .map { case (i, t) => s"""[$i,${f"$t%.3f"}]""" }.mkString("[", ",", "]")
-      val bl = sentinelKernelNames.zip(sentinelBaselines)
-        .map { case (n, b) => jq(n) + ":" + f"$b%.3f" }.mkString("{", ",", "}")
-      val fl = sentinelKernelNames.zip(kernelFloors)
-        .map { case (n, b) => jq(n) + ":" + f"$b%.3f" }.mkString("{", ",", "}")
-      s"""{"baseline":${f"$sentinelBaseline%.3f"},"baselines":$bl,"floors":$fl,"series_unit":"ratio","series":$series,"max_drift":${f"$maxDrift%.2f"},"baseline_vs_best_floor":${f"$baselineVsBest%.2f"},"contended":$contended}"""
+    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val json = new ObjectMapper()
+    val errorsNode = json.createObjectNode()
+    errors.foreach { case (k, v) => errorsNode.put(k, v) }
+
+    val full = json.createObjectNode()
+      .put("metric", "total").put("value", total).put("unit", "sec")
+    val qs = full.putObject("queries")
+    results.foreach { case (k, v) => qs.put(k, v) }
+    full.set[ObjectNode]("errors", errorsNode)
+    full.put("repeats", repeats)
+    val sentinel = full.putObject("sentinel")
+      .put("baseline", dec(sentinelBaseline, 3))
+    val baselinesNode = sentinel.putObject("baselines")
+    val floorsNode = sentinel.putObject("floors")
+    sentinelKernelNames.indices.foreach { k =>
+      baselinesNode.put(sentinelKernelNames(k), dec(sentinelBaselines(k), 3))
+      floorsNode.put(sentinelKernelNames(k), dec(kernelFloors(k), 3))
     }
-    val qs = finalResults.map { case (k, v) => jq(k) + ":" + v }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => jq(k) + ":" + jq(v) }.mkString("{", ",", "}")
-    val remedJson = reMedianNote.map { case (k, v) => jq(k) + ":" + v }.mkString("{", ",", "}")
-    val suspJson = suspects.map(jq).mkString("[", ",", "]")
-    val total = finalResults.collect { case (_, v) if v >= 0 => v }.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"remedianed":$remedJson,"suspects":$suspJson,"repeats":$repeats,"sentinel":$sentinelJson,"sf":"$sfDir"}"""
+    // series entries are [query_index, drift_ratio] — ratio vs the
+    // rotating kernel's own baseline (kernel = index order cpu,
+    // shuffle, scan, repeating)
+    sentinel.put("series_unit", "ratio")
+    val seriesNode = sentinel.putArray("series")
+    sentinelSeries.foreach { case (i, t) => seriesNode.addArray().add(i).add(dec(t, 3)) }
+    sentinel.put("max_drift", dec(maxDrift, 2))
+      .put("baseline_vs_best_floor", dec(baselineVsBest, 2))
+      .put("contended", contended)
+    full.put("sf", sfDir)
+    val line = json.writeValueAsString(full)
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"), line + "\n")
     Files.createDirectories(Paths.get("bench-results"))
     Files.writeString(Paths.get("bench-results/BENCH_FULL.json"), line + "\n")
-    // ---- best-known-floor map (round-11) ----
-    // Monotone min-merge of this sweep's medians into
-    // bench-results/BENCH_BEST_<sf>.json. Values measured on a slow
-    // box can only be HIGHER than the true floor, so merging them is
-    // harmless under min; the one class that can be artificially LOW —
-    // floor-normalized ESTIMATES (suspects) — is excluded. Errors
-    // (v < 0) are excluded too. tools/bench_diff.py --best diffs a
-    // record against this map.
-    // Round-12 provenance: each floor entry records WHEN it was
-    // captured and how quiet the host was (the sweep's floor ratio at
-    // capture) — a floor stamped at ratio 1.8 is a soft upper bound a
-    // quiet window will cut, and bench_diff prints exactly that.
-    // bench-results/REBASELINE.json ({name: {since, reason}}) resets a
-    // floor without hand-editing the map: when an entry's capture epoch
-    // predates `since`, the NEXT non-suspect sweep value replaces the
-    // old min (stamped with the reason), after which min-merge resumes
-    // — so a deliberate algorithmic slowdown is auditable, not
-    // suppressed as a permanent phantom regression.
-    locally {
-      val content =
-        if (Files.exists(bestPath)) Files.readString(bestPath) else ""
-      val rbPath = Paths.get("bench-results/REBASELINE.json")
-      val rbContent =
-        if (Files.exists(rbPath)) Some(Files.readString(rbPath)) else None
-      Files.writeString(bestPath, BenchNoise.mergeFloorMap(
-        content, rbContent, sfBase, finalResults, suspects.toSet,
-        java.time.LocalDate.now().toString, baselineVsBest) + "\n")
-    }
     println(line)
-    // The driver captures only the LAST ~2000 chars of stdout; the
-    // full-precision line above (~2.8 KB at 89 queries) overflows that
-    // window, so the driver's JSON parse sees a clipped fragment and
-    // records nothing. Emit a tail-safe digest as the FINAL line:
-    // 3-decimal values, slowest queries first, trimmed to a byte
-    // budget (the fastest sub-second entries carry the least signal;
-    // the full map is in target/bench.json and the committed
-    // BENCH_LOCAL.json).
-    val budget = 1700
-    val fmt = (v: Double) => if (v < 0) "-1" else f"$v%.3f"
-    // Digest-entry ordering (r14 contract hardening): the r13 slowest-
-    // first digest silently dropped queries that got FASTER, which the
-    // driver's round-over-round compare then reported as
-    // `dropped_from_bench` — a correctness red flag for what was
-    // actually the round's best news. The digest now carries the
-    // previous full sweep's digest keys FIRST (bench-results/
-    // DIGEST_KEYS.txt, written below), so a query the driver saw last
-    // round can never vanish from the window just because it improved;
-    // remaining budget fills slowest-first as before. The full
-    // per-query map is unchanged in target/bench.json +
-    // bench-results/BENCH_FULL.json.
+
+    // The digest carries the previous full sweep's digest keys
+    // (bench-results/DIGEST_KEYS.txt) so a query the last digest showed
+    // does not vanish from it because it got faster.
     val keysPath = Paths.get("bench-results/DIGEST_KEYS.txt")
-    val priorKeys: Set[String] =
+    val carry: Set[String] =
       if (Files.exists(keysPath))
         scala.jdk.CollectionConverters
           .IteratorHasAsScala(Files.lines(keysPath).iterator).asScala
           .map(_.trim).filter(_.nonEmpty).toSet
       else Set.empty
-    val bySlowest = finalResults.sortBy { case (_, v) => -v }
-    val ordered = bySlowest.filter(e => priorKeys(e._1)) ++
-      bySlowest.filterNot(e => priorKeys(e._1))
-    val nPriority = ordered.count(e => priorKeys(e._1))
-    val entries = ordered.map { case (k, v) => (k, jq(k) + ":" + fmt(v)) }
-    var kept = entries.length
-    // digest-local suspects: only names the digest itself carries — a
-    // suspect flag on an omitted query is dead weight in the driver's
-    // byte-budgeted window (the FULL suspect list is in the full map);
-    // r13's digest spent ~800 bytes flagging 30 omitted queries.
-    // `maxSusp` additionally caps the shown suspect names when the
-    // budget demands it (a noisy sweep can flag half the digest):
-    // suspect flags are advisory, carried-key PRESENCE is the contract.
-    def digest(n: Int, maxSusp: Int): String = {
-      val names = entries.take(n).map(_._1).toSet
-      val sj = suspects.filter(names).take(maxSusp).map(jq).mkString("[", ",", "]")
-      val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","repeats":$repeats,"sf":"$sfDir","contended":$contended,"sentinel_drift":${f"$maxDrift%.2f"},"floor_ratio":${f"$baselineVsBest%.2f"},"remedianed_n":${reMedianNote.size},"suspects":$sj,"suspects_total":${suspects.size},"full_map":"bench-results/BENCH_FULL.json","errors":$errJson,"queries":{"""
-      val omitted = if (n < entries.length)
-        s""","omitted":${entries.length - n}""" else ""
-      head + entries.take(n).map(_._2).mkString(",") + "}" + omitted + "}"
-    }
-    // Trim order (the r14 full-sweep bug: a grown carry-set plus a
-    // suspect-heavy window trimmed INTO the priority prefix, cutting
-    // exactly the improved queries the carry exists to protect):
-    //  1. drop non-priority entries (slowest-first fill is best-effort);
-    //  2. then shorten the shown suspect list;
-    //  3. only then — never observed within the 2000-char driver
-    //     window at realistic carry sizes — cut priority entries.
-    var maxSusp = entries.length
-    while (kept > math.min(nPriority, entries.length) &&
-      digest(kept, maxSusp).length > budget) kept -= 1
-    while (maxSusp > 0 && digest(kept, maxSusp).length > budget) maxSusp -= 1
-    while (kept > 1 && digest(kept, maxSusp).length > budget) kept -= 1
-    // persist the carry-set for the next sweep — full sweeps only (a
-    // SPARK_GRAFT_BENCH_ONLY subset would shrink it and reintroduce
-    // phantom drops), CAPPED so it cannot ratchet past what the budget
-    // can hold: this sweep's surviving priority keys first (they were
-    // last round's contract), then the newly-slowest fill.
-    val CarryCap = 40
+    val head = json.createObjectNode()
+      .put("metric", "total").put("value", dec(total, 3)).put("unit", "sec")
+      .put("repeats", repeats).put("sf", sfDir).put("contended", contended)
+      .put("sentinel_drift", dec(maxDrift, 2)).put("floor_ratio", dec(baselineVsBest, 2))
+      .put("full_map", "bench-results/BENCH_FULL.json")
+    head.set[ObjectNode]("errors", errorsNode)
+    val (digest, digestKeys) = BenchNoise.digest(head, results, carry)
+    // full sweeps only: a SPARK_GRAFT_BENCH_ONLY subset would shrink the
+    // carry and drop the keys it leaves out
     if (only.isEmpty)
-      Files.writeString(keysPath,
-        entries.take(kept).map(_._1).take(CarryCap).mkString("", "\n", "\n"))
-    println(digest(kept, maxSusp))
+      Files.writeString(keysPath, digestKeys.mkString("", "\n", "\n"))
+    println(digest)
     spark.stop()
   }
+
+  /** `v` rounded half-up to `places` decimals, as the JSON lines print it. */
+  private[graft] def dec(v: Double, places: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(places, java.math.RoundingMode.HALF_UP)
 }
 
-/** Pure helpers for Bench's in-sweep noise correction, factored out so
-  * the logic that decides what gets re-medianed on the DRIVER's box is
-  * unit-tested (BenchNoiseSpec) instead of only exercised when a sweep
-  * happens to run contended.
-  */
 private[graft] object BenchNoise {
-
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  /** Pure floor-map min-merge with per-entry provenance (round-12).
-    *
-    * Each floor entry records WHEN it was captured and how quiet the
-    * host was (the sweep's floor ratio at capture) — a floor stamped
-    * at ratio 1.8 is a soft upper bound a quiet window will cut, and
-    * tools/bench_diff.py prints exactly that. Entries predating the
-    * provenance format keep an explicit unknown marker: stamping them
-    * with TODAY's sweep conditions would fabricate capture history.
-    *
-    * `rebaselineContent` (bench-results/REBASELINE.json,
-    * {name: {since, reason}}) resets a floor without hand-editing the
-    * map: when an entry's capture epoch predates `since`, the next
-    * NON-SUSPECT sweep value replaces the old min (stamped with the
-    * reason), after which min-merge resumes — a deliberate algorithmic
-    * slowdown is auditable, never suppressed as a permanent phantom
-    * regression. Suspect-flagged and errored values never enter the
-    * map ([[graft.Bench]] r11 rule, unchanged).
-    */
-  def mergeFloorMap(
-      oldContent: String,
-      rebaselineContent: Option[String],
-      sfBase: String,
-      finalResults: Seq[(String, Double)],
-      suspectSet: Set[String],
-      epochNow: String,
-      floorRatio: Double): String = {
-    val existing: Map[String, Double] = {
-      val (qs, sf) = parseReference(oldContent)
-      if (new java.io.File(sf).getName == sfBase) qs else Map.empty
-    }
-    val oldProv: Map[String, String] = parseProvenance(oldContent)
-    val rebaseline: Map[String, (String, String)] = rebaselineContent match {
-      case None => Map.empty
-      case Some(s) =>
-        objectEntries(s, 0).flatMap { case (name, obj) =>
-          strField(obj, "since").map(since =>
-            name -> (since, strField(obj, "reason").getOrElse("?")))
-        }.toMap
-    }
-    def prov(note: Option[String], epoch: String = epochNow): String =
-      s"""{"epoch":"$epoch","floor_ratio":${f"$floorRatio%.2f"}""" +
-        note.map(r => s""","note":${jq(r)}""").getOrElse("") + "}"
-    def epochOf(pv: String): String = strField(pv, "epoch").getOrElse("")
-    val merged: Seq[(String, Double, String)] =
-      (existing.keySet ++ finalResults.map(_._1)).toSeq.sorted.flatMap { n =>
-        val cand = finalResults.collectFirst {
-          case (`n`, v) if v >= 0 && !suspectSet(n) => v }
-        val kept = oldProv.getOrElse(n,
-          """{"epoch":"","floor_ratio":-1,"note":"pre-r12 capture, provenance unknown"}""")
-        val reset = rebaseline.get(n).filter { case (since, _) =>
-          // ISO dates compare lexicographically; an empty recorded
-          // epoch (pre-provenance entry) always resets. A query with
-          // no prior floor has nothing to reset — first capture is a
-          // plain stamp (ADVICE r12: no spurious "rebaselined:" mark).
-          existing.contains(n) && cand.isDefined && epochOf(kept) < since }
-        (existing.get(n), cand) match {
-          case (_, Some(c)) if reset.isDefined =>
-            // stamp max(now, since): a future-dated `since` would
-            // otherwise keep epoch < since and re-fire every sweep,
-            // silently disabling min-merge (ADVICE r12)
-            val stamp = Seq(epochNow, reset.get._1).max
-            Some((n, c, prov(Some(s"rebaselined: ${reset.get._2}"), stamp)))
-          case (Some(e), Some(c)) =>
-            Some(if (c < e) (n, c, prov(None)) else (n, e, kept))
-          case (Some(e), None) => Some((n, e, kept))
-          case (None, Some(c)) if floorRatio <= 1.5 =>
-            Some((n, c, prov(None)))
-          case (None, Some(_)) =>
-            // FIRST capture of a brand-new query in a noisy window
-            // (sentinel baseline >1.5× the historical floor): skip it.
-            // A new query has no reference, so the suspect rule can't
-            // protect it, and a cold-JVM first stamp then poisons its
-            // own correction — every honest later reading moves >1.5×
-            // vs the bogus floor and is flagged suspect (r13: chrF's
-            // first capture recorded 16 s vs a 1.3 s honest floor).
-            // Leave the entry absent for the first quiet window.
-            None
-          case _               => None
-        }
-      }
-    val bestQs = merged.map { case (k, v, _) => jq(k) + ":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val provQs = merged.map { case (k, _, p) => jq(k) + ":" + p }
-      .mkString("{", ",", "}")
-    s"""{"metric":"best_floor","unit":"sec","sf":"$sfBase","queries":$bestQs,"provenance":$provQs}"""
-  }
-
-  /** Balanced `{...}` starting at `start`, respecting string literals
-    * (escaped quotes included) so a '}' or '{' INSIDE a note string can
-    * never truncate the match — the r12 regex did exactly that (ADVICE
-    * r12: an unterminated note carried into the next BENCH_BEST write).
-    * Returns (raw object text, index just past it). No JSON library in
-    * the unmanaged classpath, hence the hand scanner.
-    */
-  private def scanObject(s: String, start: Int): Option[(String, Int)] = {
-    if (start >= s.length || s.charAt(start) != '{') return None
-    var i = start; var depth = 0; var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) {
-        if (c == '\\') i += 1
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) return Some((s.substring(start, i + 1), i + 1))
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
-
-  /** JSON string literal at s(start) == '"' → (decoded value, index past
-    * the closing quote). Handles \" \\ \uXXXX and passes other escapes
-    * through verbatim.
-    */
-  private def scanString(s: String, start: Int): Option[(String, Int)] = {
-    if (start >= s.length || s.charAt(start) != '"') return None
-    val sb = new StringBuilder
-    var i = start + 1
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\' if i + 1 < s.length =>
-          s.charAt(i + 1) match {
-            case '"'  => sb += '"';  i += 2
-            case '\\' => sb += '\\'; i += 2
-            case 'u' if i + 6 <= s.length =>
-              sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-              i += 6
-            case other => sb += other; i += 2
-          }
-        case '"' => return Some((sb.toString, i + 1))
-        case c   => sb += c; i += 1
-      }
-    }
-    None
-  }
-
-  /** ("key", raw object value) pairs of the object starting at `start`
-    * — only object-valued entries are yielded (the provenance and
-    * REBASELINE maps are exactly that shape).
-    */
-  private def objectEntries(s: String, start: Int): Seq[(String, String)] = {
-    val at = s.indexOf('{', start)
-    if (at < 0) return Seq.empty
-    scanObject(s, at) match {
-      case None => Seq.empty
-      case Some((obj, _)) =>
-        val out = Seq.newBuilder[(String, String)]
-        var i = 1 // inside the outer '{'
-        while (i < obj.length - 1) {
-          if (obj.charAt(i) == '"') {
-            scanString(obj, i) match {
-              case Some((name, after)) =>
-                var j = after
-                while (j < obj.length && (obj.charAt(j) == ' ' || obj.charAt(j) == ':')) j += 1
-                scanObject(obj, j) match {
-                  case Some((v, next)) => out += name -> v; i = next
-                  case None            => i = after
-                }
-              case None => i += 1
-            }
-          } else i += 1
-        }
-        out.result()
-    }
-  }
-
-  /** Decoded string field of a single raw JSON object (first match). */
-  private def strField(obj: String, field: String): Option[String] = {
-    val key = "\"" + field + "\":"
-    val at = obj.indexOf(key)
-    if (at < 0) None
-    else {
-      var i = at + key.length
-      while (i < obj.length && obj.charAt(i) == ' ') i += 1
-      scanString(obj, i).map(_._1)
-    }
-  }
-
-  /** {name → raw provenance object} of a BENCH_BEST record's
-    * "provenance" map, parsed with the string-aware scanner (empty for
-    * pre-r12 records without one).
-    */
-  private[graft] def parseProvenance(content: String): Map[String, String] = {
-    val key = "\"provenance\":"
-    val at = content.indexOf(key)
-    if (at < 0) Map.empty
-    else objectEntries(content, at + key.length).toMap
-  }
-
-  /** Hard ceiling on in-sweep re-medians: with a same-scale reference
-    * the mover rule bounds the set naturally, but with drift-only
-    * suspicion a fully contended box would otherwise re-run the whole
-    * registry and double the sweep.
-    */
-  val ReMedianCap = 40
-
-  /** (query→median, sf) parsed from a bench JSON line (the artifact's
-    * own minimal schema — no JSON library in the unmanaged classpath).
-    */
-  def parseReference(s: String): (Map[String, Double], String) = {
-    val qStart = s.indexOf("\"queries\":{")
-    val qs =
-      if (qStart < 0) Map.empty[String, Double]
-      else {
-        val qEnd = s.indexOf("}", qStart)
-        "\"([A-Za-z0-9_]+)\":(-?[0-9.eE+]+)".r
-          .findAllMatchIn(s.substring(qStart + 11, qEnd))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    val sf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-    (qs, sf)
-  }
-
-  /** Sentinel series → sorted (query index, drift ratio) checkpoints,
-    * with the baseline itself as the (0, 1.0) anchor.
-    */
-  def checkpointRatios(
-      series: Seq[(Int, Double)], baseline: Double): Seq[(Int, Double)] =
-    ((0, 1.0) +: series.map { case (i, t) =>
-      (i, if (baseline > 0) t / baseline else 1.0)
-    }).sortBy(_._1)
-
-  /** A query's segment drift: the WORSE of the two checkpoints
-    * bracketing its index (conservative — sustained contention shows on
-    * both sides, a spike on one is enough to distrust the timing).
-    */
-  def segDrift(checkpoints: Seq[(Int, Double)], idx: Int): Double = {
-    val before = checkpoints.takeWhile(_._1 <= idx).lastOption.map(_._2).getOrElse(1.0)
-    val after = checkpoints.find(_._1 > idx).map(_._2).getOrElse(before)
-    math.max(before, after)
-  }
-
-  /** Does the sweep need the correction pass at all? Either within-run
-    * sentinel drift OR a baseline sitting >1.5× above the historical
-    * sentinel floor — the latter is the sustained-slow-phase signature
-    * (whole sweep slow, drift quiet) that shipped r09's 4.8× phantom.
-    */
-  def sweepNoisy(maxDrift: Double, floorRatio: Double): Boolean =
-    maxDrift > 1.5 || floorRatio > 1.5
 
   /** The historical sentinel floor, robust to one-off fast flukes: the
     * 10th percentile of all recorded baselines (raw min with <5
@@ -757,26 +318,39 @@ private[graft] object BenchNoise {
     else s((s.size * 0.1).toInt)
   }
 
-  /** Post-correction honesty check: a final value that still deviates
-    * >1.5× (either way) from the same-scale quiet reference in a noisy
-    * sweep is flagged `suspect` rather than shipped as healthy.
-    * Sub-50 ms references are scheduler noise, never suspects; absent
-    * reference rows (new queries) can't be judged.
-    */
-  def stillSuspect(v: Double, ref: Option[Double]): Boolean =
-    ref.exists(r => r > 0.05 && v > 0 && (v / r > 1.5 || r / v > 1.5))
+  /** Stdout tail budget for the digest line, in chars. */
+  val DigestBudget = 1700
 
-  /** The suspicion rule. With a same-scale reference: noisy segment AND
-    * >1.5× movement either way vs that reference (sub-50 ms reference
-    * rows are scheduler noise, never suspects). Without one (sf
-    * mismatch or first run): noisy segment alone — the caller caps the
-    * count.
+  /** Digest slots kept for the slowest queries outside the carry. */
+  val DigestReserve = 5
+
+  /** The tail-safe digest: `head` plus as many 3-decimal query medians
+    * as fit [[DigestBudget]], and `omitted` when some did not fit.
+    *
+    * Entries rank as: the [[DigestReserve]] slowest queries outside
+    * `carry` (a new slow query always shows), then the carried keys,
+    * then everything else, each group slowest first. Trimming cuts from
+    * the end of that ranking. Returns the line and its query keys, which
+    * become the next sweep's carry — so newcomers rotate in and the
+    * fastest carried keys rotate out.
     */
-  def suspicious(
-      v: Double, drift: Double, ref: Option[Double], haveReference: Boolean): Boolean =
-    drift > 1.5 && {
-      if (haveReference)
-        ref.exists(r => r > 0.05 && (v / r > 1.5 || r / v > 1.5))
-      else true
+  def digest(
+      head: ObjectNode,
+      results: Seq[(String, Double)],
+      carry: Set[String]): (String, Seq[String]) = {
+    val (carried, fresh) = results.sortBy(-_._2).partition(e => carry(e._1))
+    val ranked = fresh.take(DigestReserve) ++ carried ++ fresh.drop(DigestReserve)
+    def render(n: Int): String = {
+      val line = head.deepCopy()
+      val qs = line.putObject("queries")
+      ranked.take(n).foreach { case (k, v) =>
+        if (v < 0) qs.put(k, -1) else qs.put(k, Bench.dec(v, 3))
+      }
+      if (n < ranked.size) line.put("omitted", ranked.size - n)
+      line.toString
     }
+    val n = (ranked.size to 2 by -1).find(render(_).length <= DigestBudget)
+      .getOrElse(math.min(1, ranked.size))
+    (render(n), ranked.take(n).map(_._1))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -48,27 +49,20 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // {SFDIR} lets oracles address parquet files directly (DuckDB
     // parquet_metadata) — substituted here so the dumped oracle_sql.json
     // always targets the exact data directory this run read.
     // filtered by the same `only` set as the parquet dump, so a subset
     // outDir never claims oracle entries it has no outputs for
-    val json = SparkEntry.oracleSql
+    val json = oracleJson(SparkEntry.oracleSql
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("{SFDIR}", sfDir))}" }.mkString("{", ",", "}")
+      .map { case (k, v) => k -> v.replace("{SFDIR}", sfDir) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** The oracle map as one JSON object, keys sorted. */
+  private[graft] def oracleJson(oracles: Map[String, String]): String =
+    new ObjectMapper().writeValueAsString(
+      new java.util.TreeMap[String, String](oracles.asJava))
 }

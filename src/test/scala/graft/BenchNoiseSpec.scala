@@ -1,75 +1,13 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** Unit coverage for the in-sweep noise-correction decisions. These run
-  * on the DRIVER's contended box where we can't reproduce conditions
-  * interactively, so every branch of the pure logic is pinned here: the
-  * reference parse (including sf extraction), the scale-match guard,
-  * segment-drift bracketing, and the suspicion rule with and without a
-  * usable reference.
+/** Unit coverage for Bench's pure helpers: the sentinel floor and the
+  * byte-budgeted digest printed as the last stdout line.
   */
 class BenchNoiseSpec extends AnyFunSuite {
-
-  private val sample =
-    """{"metric":"total","value":83.5,"unit":"sec","queries":{"q1_agg":0.5,"x_slow":2.25,"neg":-1.0},""" +
-      """"errors":{},"repeats":3,"sf":"/root/testdata/sf0.001"}"""
-
-  test("parseReference extracts the query medians and the recorded sf") {
-    val (qs, sf) = BenchNoise.parseReference(sample)
-    assert(qs === Map("q1_agg" -> 0.5, "x_slow" -> 2.25, "neg" -> -1.0))
-    assert(sf === "/root/testdata/sf0.001")
-  }
-
-  test("parseReference is total on malformed input") {
-    assert(BenchNoise.parseReference("") === (Map.empty, ""))
-    assert(BenchNoise.parseReference("""{"metric":"total"}""") === (Map.empty, ""))
-  }
-
-  test("checkpointRatios anchors at (0, 1.0) and normalizes by baseline") {
-    val cps = BenchNoise.checkpointRatios(Seq((10, 0.4), (20, 0.2)), 0.2)
-    assert(cps === Seq((0, 1.0), (10, 2.0), (20, 1.0)))
-    // zero/negative baseline degrades to ratio 1.0 (never divides)
-    assert(BenchNoise.checkpointRatios(Seq((10, 0.4)), 0.0) === Seq((0, 1.0), (10, 1.0)))
-  }
-
-  test("segDrift takes the worse of the two bracketing checkpoints") {
-    val cps = Seq((0, 1.0), (10, 2.0), (20, 1.1))
-    assert(BenchNoise.segDrift(cps, 5) === 2.0)   // before=1.0, after=2.0
-    assert(BenchNoise.segDrift(cps, 10) === 2.0)  // exactly at a checkpoint
-    assert(BenchNoise.segDrift(cps, 15) === 2.0)  // before=2.0, after=1.1
-    assert(BenchNoise.segDrift(cps, 25) === 1.1)  // past the last: before only
-  }
-
-  test("suspicion needs BOTH a noisy segment and a >1.5x move vs a same-scale reference") {
-    // quiet segment: never suspicious however far the move
-    assert(!BenchNoise.suspicious(10.0, 1.2, Some(1.0), haveReference = true))
-    // noisy segment + big move: suspicious (either direction)
-    assert(BenchNoise.suspicious(2.0, 1.8, Some(1.0), haveReference = true))
-    assert(BenchNoise.suspicious(0.5, 1.8, Some(1.0), haveReference = true))
-    // noisy segment but the value held steady: not suspicious
-    assert(!BenchNoise.suspicious(1.1, 1.8, Some(1.0), haveReference = true))
-    // sub-50ms reference rows are scheduler noise, never suspects
-    assert(!BenchNoise.suspicious(0.2, 1.8, Some(0.01), haveReference = true))
-    // reference exists but lacks this query: not suspicious (a new
-    // query has nothing to be compared against)
-    assert(!BenchNoise.suspicious(2.0, 1.8, None, haveReference = true))
-  }
-
-  test("without a same-scale reference, drift alone marks suspects (caller caps)") {
-    assert(BenchNoise.suspicious(2.0, 1.8, None, haveReference = false))
-    assert(!BenchNoise.suspicious(2.0, 1.2, None, haveReference = false))
-    assert(BenchNoise.ReMedianCap > 0)
-  }
-
-  test("sweepNoisy fires on floor ratio alone — the r09 sustained-slow-phase signature") {
-    // r09 shipped max_drift 1.24, floor 3.30, remedianed_n 0: must fire now
-    assert(BenchNoise.sweepNoisy(maxDrift = 1.24, floorRatio = 3.30))
-    // classic within-run drift still fires
-    assert(BenchNoise.sweepNoisy(maxDrift = 1.8, floorRatio = 1.0))
-    // genuinely quiet run: no correction pass
-    assert(!BenchNoise.sweepNoisy(maxDrift = 1.24, floorRatio = 1.3))
-  }
 
   test("robustFloor is the p10 of history, immune to one-off fast flukes") {
     // a single 0.19 fluke among steady ~0.25 readings must not set the floor
@@ -82,137 +20,38 @@ class BenchNoiseSpec extends AnyFunSuite {
     assert(BenchNoise.robustFloor(Seq(-1.0, 0.0)) === 0.0)
   }
 
-  test("stillSuspect flags post-correction values >1.5x off the quiet reference") {
-    assert(BenchNoise.stillSuspect(6.47, Some(1.34)))  // the r09 phantom
-    assert(BenchNoise.stillSuspect(0.5, Some(1.0)))    // too-fast is suspect too
-    assert(!BenchNoise.stillSuspect(1.4, Some(1.0)))   // within band
-    assert(!BenchNoise.stillSuspect(0.2, Some(0.01)))  // sub-50ms ref: scheduler noise
-    assert(!BenchNoise.stillSuspect(2.0, None))        // no reference row
-    assert(!BenchNoise.stillSuspect(-1.0, Some(1.0)))  // failed query, not a timing
+  private val json = new ObjectMapper()
+  private def head = json.createObjectNode()
+    .put("metric", "total").put("value", 1.0).put("unit", "sec")
+    .put("contended", false)
+
+  test("digest: an overflowing carry still leaves room for the slowest newcomer") {
+    // 80 carried keys cannot fit the budget on their own
+    val carried = (1 to 80).map(i => f"carried_query_with_a_long_name_$i%02d" -> (10.0 + i))
+    val newcomers = Seq("newcomer_slowest" -> 99.0, "newcomer_fast" -> 0.01)
+    val (line, keys) = BenchNoise.digest(head, carried ++ newcomers, carried.map(_._1).toSet)
+    assert(line.length <= BenchNoise.DigestBudget)
+    val parsed = json.readTree(line)
+    val shown = parsed.get("queries")
+    assert(shown.has("newcomer_slowest"), line)
+    assert(shown.get("newcomer_slowest").asDouble === 99.0)
+    // the slowest carried key survives the trim, the fastest does not
+    assert(shown.has("carried_query_with_a_long_name_80"))
+    assert(!shown.has("carried_query_with_a_long_name_01"))
+    assert(parsed.get("omitted").asInt === 82 - shown.size)
+    assert(parsed.get("contended").asBoolean === false)
+    // the saved carry rotates: the newcomer enters it
+    assert(keys.toSet === shown.fieldNames.asScala.toSet)
   }
 
-  // ---- round-12 floor-map merge: provenance + re-baseline ----
-
-  private def floors(json: String): Map[String, Double] =
-    BenchNoise.parseReference(json)._1
-
-  private def provOf(json: String, name: String): String =
-    BenchNoise.parseProvenance(json).getOrElse(name, "")
-
-  test("mergeFloorMap: min-merge stamps new captures, keeps old provenance otherwise") {
-    val old = """{"metric":"best_floor","unit":"sec","sf":"sf0.1",""" +
-      """"queries":{"a":0.500,"b":0.300},""" +
-      """"provenance":{"a":{"epoch":"2026-08-01","floor_ratio":1.10},"b":{"epoch":"2026-08-02","floor_ratio":1.30}}}"""
-    val out = BenchNoise.mergeFloorMap(old, None, "sf0.1",
-      Seq("a" -> 0.400, "b" -> 0.350, "c" -> 0.200), Set.empty,
-      "2026-08-16", 1.05)
-    assert(floors(out) === Map("a" -> 0.4, "b" -> 0.3, "c" -> 0.2))
-    // a improved -> stamped with this sweep's epoch + ratio
-    assert(provOf(out, "a").contains("\"epoch\":\"2026-08-16\"")
-      && provOf(out, "a").contains("1.05"))
-    // b did not improve -> original capture history preserved
-    assert(provOf(out, "b").contains("\"epoch\":\"2026-08-02\"")
-      && provOf(out, "b").contains("1.30"))
-    // c is new -> stamped now
-    assert(provOf(out, "c").contains("\"epoch\":\"2026-08-16\""))
-  }
-
-  test("mergeFloorMap: a noisy window cannot stamp a brand-new query's first floor") {
-    val old = """{"metric":"best_floor","unit":"sec","sf":"sf0.1",""" +
-      """"queries":{"a":0.500},""" +
-      """"provenance":{"a":{"epoch":"2026-08-01","floor_ratio":1.10}}}"""
-    // floorRatio 1.60: existing entries still min-merge (the suspect
-    // rule protects them), but the new query "c" has no reference to
-    // protect it — its first capture must wait for a quiet window
-    // (r13: chrF's cold first stamp recorded 16 s vs a 1.3 s floor and
-    // then poisoned its own correction)
-    val noisy = BenchNoise.mergeFloorMap(old, None, "sf0.1",
-      Seq("a" -> 0.400, "c" -> 16.0), Set.empty, "2026-08-16", 1.60)
-    assert(floors(noisy) === Map("a" -> 0.4))
-    // same capture in a quiet window: the first stamp lands
-    val quiet = BenchNoise.mergeFloorMap(old, None, "sf0.1",
-      Seq("a" -> 0.400, "c" -> 1.3), Set.empty, "2026-08-16", 1.05)
-    assert(floors(quiet) === Map("a" -> 0.4, "c" -> 1.3))
-  }
-
-  test("mergeFloorMap: suspects and errors never enter; carried entries keep unknown marker") {
-    val old = """{"metric":"best_floor","unit":"sec","sf":"sf0.1","queries":{"a":0.500}}"""
-    val out = BenchNoise.mergeFloorMap(old, None, "sf0.1",
-      Seq("a" -> 0.100, "err" -> -1.0), Set("a"), "2026-08-16", 1.00)
-    // a's 0.100 was suspect-flagged -> old floor kept
-    assert(floors(out) === Map("a" -> 0.5))
-    // pre-provenance carried entry gets the explicit unknown marker
-    assert(provOf(out, "a").contains("provenance unknown"))
-    assert(!out.contains("\"err\""))
-  }
-
-  test("mergeFloorMap: re-baseline replaces a stale floor once, then min resumes") {
-    val old = """{"metric":"best_floor","unit":"sec","sf":"sf0.1",""" +
-      """"queries":{"a":0.200},""" +
-      """"provenance":{"a":{"epoch":"2026-08-01","floor_ratio":1.00}}}"""
-    val rb = Some("""{"a": {"since": "2026-08-15", "reason": "algorithm deliberately widened"}}""")
-    // sweep value HIGHER than the old floor: without re-baseline it
-    // would read as a permanent regression; with it, it replaces
-    val out1 = BenchNoise.mergeFloorMap(old, rb, "sf0.1",
-      Seq("a" -> 0.600), Set.empty, "2026-08-16", 1.00)
-    assert(floors(out1) === Map("a" -> 0.6))
-    assert(provOf(out1, "a").contains("rebaselined: algorithm deliberately widened"))
-    // next sweep: entry's epoch (2026-08-16) now postdates since -> plain min
-    val out2 = BenchNoise.mergeFloorMap(out1, rb, "sf0.1",
-      Seq("a" -> 0.900), Set.empty, "2026-08-17", 1.00)
-    assert(floors(out2) === Map("a" -> 0.6), "re-baseline must fire exactly once")
-    // and a suspect-flagged sweep never triggers the reset
-    val out3 = BenchNoise.mergeFloorMap(old, rb, "sf0.1",
-      Seq("a" -> 0.700), Set("a"), "2026-08-16", 1.00)
-    assert(floors(out3) === Map("a" -> 0.2))
-  }
-
-  test("mergeFloorMap: a note containing '}' round-trips without truncation") {
-    val rb = Some("""{"a": {"since": "2026-08-15", "reason": "widened {band: 7} and a \"quoted\" cause"}}""")
-    val old = """{"metric":"best_floor","unit":"sec","sf":"sf0.1",""" +
-      """"queries":{"a":0.200},""" +
-      """"provenance":{"a":{"epoch":"2026-08-01","floor_ratio":1.00}}}"""
-    val out1 = BenchNoise.mergeFloorMap(old, rb, "sf0.1",
-      Seq("a" -> 0.600), Set.empty, "2026-08-16", 1.00)
-    // the note carries the brace and the escaped quote intact
-    assert(provOf(out1, "a").contains("{band: 7}".replace("{", "\\u007b") )
-      || provOf(out1, "a").contains("{band: 7}"),
-      s"note lost content: ${provOf(out1, "a")}")
-    assert(provOf(out1, "a").contains("\\\"quoted\\\""))
-    // and the NEXT merge re-parses that provenance without corruption:
-    // the r12 regex truncated at the note's '}' and produced invalid
-    // JSON here (ADVICE r12)
-    val out2 = BenchNoise.mergeFloorMap(out1, rb, "sf0.1",
-      Seq("a" -> 0.900, "b" -> 0.100), Set.empty, "2026-08-17", 1.00)
-    assert(floors(out2) === Map("a" -> 0.6, "b" -> 0.1))
-    assert(provOf(out2, "a").contains("\"epoch\":\"2026-08-16\""),
-      "reset must have fired exactly once, preserving the stamped epoch")
-  }
-
-  test("mergeFloorMap: future-dated since fires once (stamped at since), no prior floor = plain stamp") {
-    val rb = Some("""{"a": {"since": "2026-09-01", "reason": "pre-announced change"},""" +
-      """ "brandnew": {"since": "2026-08-01", "reason": "never existed"}}""")
-    val old = """{"metric":"best_floor","unit":"sec","sf":"sf0.1",""" +
-      """"queries":{"a":0.200},""" +
-      """"provenance":{"a":{"epoch":"2026-08-01","floor_ratio":1.00}}}"""
-    val out1 = BenchNoise.mergeFloorMap(old, rb, "sf0.1",
-      Seq("a" -> 0.600, "brandnew" -> 0.300), Set.empty, "2026-08-16", 1.00)
-    assert(floors(out1) === Map("a" -> 0.6, "brandnew" -> 0.3))
-    // future-dated since: epoch stamped at max(now, since) so the reset
-    // provably fires once instead of every sweep (ADVICE r12)
-    assert(provOf(out1, "a").contains("\"epoch\":\"2026-09-01\""))
-    val out2 = BenchNoise.mergeFloorMap(out1, rb, "sf0.1",
-      Seq("a" -> 0.900), Set.empty, "2026-08-17", 1.00)
-    assert(floors(out2)("a") === 0.6, "future-dated reset must not re-fire")
-    // a query with no prior floor entry gets a plain first-capture
-    // stamp, never a spurious "rebaselined:" note (ADVICE r12)
-    assert(!provOf(out1, "brandnew").contains("rebaselined"))
-  }
-
-  test("mergeFloorMap: a different-scale old map is ignored, not merged") {
-    val old = """{"metric":"best_floor","unit":"sec","sf":"sf0.001","queries":{"a":0.100}}"""
-    val out = BenchNoise.mergeFloorMap(old, None, "sf0.1",
-      Seq("a" -> 0.300), Set.empty, "2026-08-16", 1.00)
-    assert(floors(out) === Map("a" -> 0.3))
+  test("digest: everything fits -> all queries, 3-decimal values, no omitted") {
+    val (line, keys) = BenchNoise.digest(head,
+      Seq("a" -> 1.23456, "b" -> -1.0, "c" -> 0.0005), Set("c"))
+    val parsed = json.readTree(line)
+    assert(keys.toSet === Set("a", "b", "c"))
+    assert(parsed.get("queries").get("a").asDouble === 1.235)
+    assert(parsed.get("queries").get("b").asDouble === -1.0)
+    assert(parsed.get("queries").get("c").asDouble === 0.001)
+    assert(!parsed.has("omitted"))
   }
 }

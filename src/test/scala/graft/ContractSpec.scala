@@ -1,6 +1,8 @@
 package graft
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Driver-contract invariants: every oracle belongs to a registered
   * query, names are well-formed, and the flagship entry returns rows.
@@ -26,5 +28,13 @@ class ContractSpec extends AnyFunSuite {
     SparkEntry.oracleSql.foreach { case (k, v) =>
       assert(!v.contains("\t") && !v.contains("\r"), s"$k has control chars")
     }
+  }
+
+  test("oracle JSON round-trips tab, quote and control characters") {
+    val oracles = Map("q_ctrl" -> "SELECT '\t' AS t, '\"q\"' AS q, '\u0001' AS c",
+      "q_plain" -> "SELECT 1")
+    val back = new ObjectMapper().readValue(Verify.oracleJson(oracles),
+      classOf[java.util.Map[String, String]])
+    assert(back.asScala.toMap === oracles)
   }
 }

@@ -1,21 +1,20 @@
 #!/usr/bin/env python3
-"""Cross-round bench regression gate.
+"""Cross-round bench movers report.
 
 Diffs two bench artifacts (graft.Bench JSON: either a raw
-target/bench.json / BENCH_LOCAL.json line or a driver BENCH_r{N}.json
-wrapper whose `parsed` — or, failing that, the last JSON object in
-`tail` — carries the same schema) and flags per-query median movers
-beyond a ratio threshold, so a sweep regression gets a targeted
-re-median instead of being noticed a round later (or never).
+target/bench.json / BENCH_FULL.json / BENCH_LOCAL.json line or a
+BENCH_r{N}.json wrapper whose `parsed` — or, failing that, the last
+JSON object in `tail` — carries the same schema) and lists the
+per-query median movers beyond a ratio threshold, OLD -> NEW.
 
 Usage:
-  python3 tools/bench_diff.py OLD.json NEW.json [--threshold 1.5]
+  python3 tools/bench_diff.py OLD.json NEW.json [--threshold 1.5] [--min-sec 0.2]
 
 Exit code 1 when any mover exceeds the threshold in either direction
 (slower OR faster — a 3x "win" is usually a fixture change, worth the
 same look). Queries present on only one side are listed but don't fail
-the gate. Contended sweeps (sentinel verdict) are annotated: movers in
-a contended sweep are advisory, not regressions.
+the gate. A sweep that flagged itself `contended` (sentinel verdict) is
+annotated, and its movers are advisory: the report exits 0.
 """
 import argparse
 import json
@@ -24,7 +23,7 @@ import sys
 
 
 def load_doc(path):
-    """Raw bench document (driver wrappers unwrapped) — queries + sf."""
+    """Raw bench document (BENCH_r{N}.json wrappers unwrapped)."""
     with open(path) as f:
         doc = json.load(f)
     # driver wrapper: {"n":..,"tail":..,"parsed":{...}}
@@ -53,99 +52,32 @@ def load(path):
     queries = {k: float(v) for k, v in doc["queries"].items() if float(v) >= 0}
     sentinel = doc.get("sentinel", {})
     contended = bool(doc.get("contended", sentinel.get("contended", False)))
-    remedianed = doc.get("remedianed", {})
-    if not remedianed and isinstance(doc.get("remedianed_n"), int):
-        remedianed = {"_count_only": doc["remedianed_n"]}
-    # per-query suspect flags (round-10): floor-normalized estimates or
-    # values the sweep could not rescue from a sustained slow phase —
-    # movers on them are advisory, never regressions
-    suspects = set(doc.get("suspects", []))
-    # round-12 floor-map provenance: {name: {epoch, floor_ratio, note?}}
-    provenance = doc.get("provenance", {})
-    return queries, contended, remedianed, suspects, provenance
-
-
-def load_rebaseline():
-    """bench-results/REBASELINE.json: {name: {since, reason}} — the
-    explicit, auditable way to reset a floor after a deliberate
-    algorithmic change (Bench replaces the entry on its next non-suspect
-    sweep; until then diff movers on listed queries are advisory)."""
-    import os
-    p = "bench-results/REBASELINE.json"
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
+    return queries, contended
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("old", nargs="?",
-                    help="reference record; omit with --best")
+    ap.add_argument("old")
     ap.add_argument("new")
-    ap.add_argument("--best", action="store_true",
-                    help="diff NEW against the best-known-floor map "
-                         "bench-results/BENCH_BEST_<sf>.json for NEW's "
-                         "scale (the per-query min-of-medians Bench "
-                         "maintains across sweeps) instead of a single "
-                         "blessed record")
     ap.add_argument("--threshold", type=float, default=1.5)
     ap.add_argument("--min-sec", type=float, default=0.2,
                     help="ignore movers whose BOTH sides are below this "
                          "(sub-200ms timings are scheduler noise)")
     args = ap.parse_args()
 
-    if args.best:
-        import os
-        sf = os.path.basename(load_doc(args.new).get("sf", ""))
-        cand = os.path.join("bench-results", f"BENCH_BEST_{sf}.json")
-        if args.old:
-            sys.exit("error: --best resolves OLD itself; drop the OLD arg")
-        if not os.path.exists(cand):
-            sys.exit(f"error: no floor map {cand} — run tools/bench_best.py "
-                     "or a Bench sweep at this scale first")
-        args.old = cand
-    elif not args.old:
-        ap.error("OLD is required unless --best is given")
-
-    old, old_cont, old_remed, old_susp, old_prov = load(args.old)
-    new, new_cont, new_remed, new_susp, _ = load(args.new)
-    rebaseline = load_rebaseline()
-
-    def prov_note(name):
-        p = old_prov.get(name)
-        if not p:
-            return ""
-        note = f" [{p['note']}]" if p.get("note") else ""
-        return (f"  (floor captured {p.get('epoch', '?')} at host ratio "
-                f"{p.get('floor_ratio', '?')}{note})")
+    old, old_cont = load(args.old)
+    new, new_cont = load(args.new)
 
     common = sorted(set(old) & set(new))
-    movers, advisory = [], []
+    movers = []
     for name in common:
         o, n = old[name], new[name]
         if max(o, n) < args.min_sec:
             continue
         ratio = n / o if o > 0 else float("inf")
         if ratio > args.threshold or ratio < 1 / args.threshold:
-            # a rebaseline entry demotes movers only while the reset is
-            # still PENDING — mirror Bench.mergeFloorMap's rule: the reset
-            # fires when the floor's capture epoch predates `since` (a
-            # missing/empty epoch is always pending). Once the stamp shows
-            # epoch >= since the reset already happened, and movers on the
-            # query are real regressions again.
-            pending = (name in rebaseline and
-                       old_prov.get(name, {}).get("epoch", "")
-                       < rebaseline[name].get("since", ""))
-            if name in old_susp or name in new_susp:
-                advisory.append((ratio, name, o, n, ""))
-            elif pending:
-                advisory.append((ratio, name, o, n,
-                                 f"  [rebaseline pending: {rebaseline[name].get('reason', '?')}]"))
-            else:
-                movers.append((ratio, name, o, n))
+            movers.append((ratio, name, o, n))
     movers.sort(reverse=True)
-    advisory.sort(reverse=True)
 
     print(f"old: {args.old} ({len(old)} queries"
           f"{', CONTENDED' if old_cont else ''})")
@@ -163,26 +95,15 @@ def main():
         print("no common queries")
     for name in sorted(set(new) - set(old)):
         print(f"  new-only: {name} {new[name]:.2f}s")
-    if not args.best:
-        # vs the floor map, "dropped" is meaningless: the map carries
-        # the full registry while driver digests keep only the top-N
-        for name in sorted(set(old) - set(new)):
-            print(f"  dropped:  {name} (was {old[name]:.2f}s)")
-    # queries whose new-side median was auto-corrected in-sweep: their
-    # values are already noise-corrected, so movers on them are real
-    for name, note in sorted(new_remed.items()):
-        print(f"  remedianed (new side, noise-corrected in-sweep): {name} {note}")
-    for ratio, name, o, n, why in advisory:
-        kind = "rebaseline-listed" if why else "flagged suspect in-sweep"
-        print(f"  suspect mover (advisory — {kind}): "
-              f"{ratio:5.2f}x  {name}: {o:.2f}s -> {n:.2f}s{why}{prov_note(name)}")
+    for name in sorted(set(old) - set(new)):
+        print(f"  dropped:  {name} (was {old[name]:.2f}s)")
     if not movers:
-        print(f"no non-suspect movers beyond {args.threshold}x (min {args.min_sec}s)")
+        print(f"no movers beyond {args.threshold}x (min {args.min_sec}s)")
         return 0
     print(f"\n{len(movers)} movers beyond {args.threshold}x "
           "(re-median these before believing them):")
     for ratio, name, o, n in movers:
-        print(f"  {ratio:5.2f}x  {name}: {o:.2f}s -> {n:.2f}s{prov_note(name)}")
+        print(f"  {ratio:5.2f}x  {name}: {o:.2f}s -> {n:.2f}s")
     if old_cont or new_cont:
         print("NOTE: a contended sweep is involved — movers are advisory")
         return 0
