@@ -281,6 +281,10 @@ object VectorExpressions {
       books: Array[Array[Array[Double]]], bc2: Array[Array[Double]],
       subDim: Int, residual: Boolean,
       withDist: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
+    // the subspace loop reads v up to M·subDim; a shorter vector would
+    // read past the end of its array and emit garbage codes
+    require(v.numElements() >= books.length * subDim,
+      s"ivf_pq_encode needs ${books.length * subDim} elements, got ${v.numElements()}")
     var listId = -1
     var bestD = 0.0
     var j = 0

@@ -57,7 +57,9 @@ object BenchRunners {
   }
 
   /** True when `path` already holds a generated wide table with exactly
-    * `nc` fields and `numRows` total rows. WideTableGen is deterministic
+    * `nc` fields and `numRows` total rows — in exactly one file when
+    * `singleFile`, so a fixture left in an older multi-file layout is
+    * rebuilt rather than timed. WideTableGen is deterministic
     * (fixed seed), so a matching file IS the file a regeneration would
     * produce — the metadata benchmarks measure footer DECODE, and the
     * reference likewise generates each grid file once and then times
@@ -66,13 +68,14 @@ object BenchRunners {
     * cutting the 1000-col write out of every repeat.
     */
   private def wideFileMatches(
-      spark: SparkSession, path: String, nc: Int, numRows: Long): Boolean = {
+      spark: SparkSession, path: String, nc: Int, numRows: Long,
+      singleFile: Boolean = false): Boolean = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
     try {
       if (!p.getFileSystem(hconf).exists(p)) return false
       val files = FooterMeta.parquetFiles(hconf, path)
-      if (files.isEmpty) return false
+      if (files.isEmpty || (singleFile && files.size != 1)) return false
       val conf = hconf
       var totalRows = 0L
       var fieldCount = -1
@@ -494,13 +497,7 @@ object BenchRunners {
   def wideFooterProbe(
       spark: SparkSession, nc: Int, numRows: Long, workDir: String): DataFrame = {
     import spark.implicits._
-    val path = s"$workDir/wide_probe_${nc}cols"
-    // single-partition generation (r14): one nc-column file instead of
-    // 32 three-row ones — the cold fixture build was dominated by
-    // per-file column-writer/footer overhead (see WideTableGen.wide)
-    if (!wideFileMatches(spark, path, nc, numRows))
-      ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), path,
-        ParquetKnobs.WriteConfig(codec = "snappy"))
+    val path = wideProbeFixture(spark, nc, numRows, workDir)
     val (thriftUs, schemaUs, nColsRead) = footerTimesUs(spark, path)
     val df = spark.read.parquet(path)
     val subset = (0 until nc by math.max(1, nc / 10)).map(i => s"col_$i")
@@ -527,12 +524,7 @@ object BenchRunners {
       spark: SparkSession, nc: Int, numRows: Long, workDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, max => fmax, min => fmin}
     import spark.implicits._
-    val path = s"$workDir/wide_probe_${nc}cols"
-    // identical write to wideFooterProbe's — the two build-if-absent
-    // gates share this fixture and must produce the same bytes
-    if (!wideFileMatches(spark, path, nc, numRows))
-      ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), path,
-        ParquetKnobs.WriteConfig(codec = "snappy"))
+    val path = wideProbeFixture(spark, nc, numRows, workDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val file = FooterMeta.parquetFiles(conf, path).head
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
@@ -545,6 +537,21 @@ object BenchRunners {
     Seq((nc, r.getLong(0), nGroups, r.getFloat(1), r.getFloat(2), r.getFloat(3), r.getFloat(4)))
       .toDF("num_columns", "num_rows", "n_row_groups",
         "min_col0", "max_col0", "min_last", "max_last")
+  }
+
+  /** The `nc`-column file shared by [[wideFooterProbe]] and
+    * [[wideLayout]], built if absent; returns its directory. Single-
+    * partition generation (r14): one nc-column file instead of 32
+    * three-row ones — the cold fixture build was dominated by per-file
+    * column-writer/footer overhead (see WideTableGen.wide).
+    */
+  private def wideProbeFixture(
+      spark: SparkSession, nc: Int, numRows: Long, workDir: String): String = {
+    val path = s"$workDir/wide_probe_${nc}cols"
+    if (!wideFileMatches(spark, path, nc, numRows, singleFile = true))
+      ParquetKnobs.write(WideTableGen.wide(spark, nc, numRows, numPartitions = 1), path,
+        ParquetKnobs.WriteConfig(codec = "snappy"))
+    path
   }
 
   def readBenchCounts(

@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.random.XORShiftRandom
 
 /** Bridge into Spark's private[sql] Column↔Expression converters — the
   * supported seam for libraries that define native Catalyst expressions
@@ -19,4 +23,19 @@ object GraftColumnBridge {
     */
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over rows a kernel already produced in Catalyst's
+    * internal format (the private[sql] internalCreateDataFrame seam),
+    * so a generator skips the expression analysis and codegen a
+    * per-column select would cost.
+    */
+  def internalCreateDataFrame(
+      spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** The private[spark] generator behind `rand(seed)`: Rand draws
+    * `nextDouble()` from `XORShiftRandom(seed + partitionIndex)`, so a
+    * kernel seeded the same way reproduces its values exactly.
+    */
+  def xorShiftRandom(seed: Long): java.util.Random = new XORShiftRandom(seed)
 }

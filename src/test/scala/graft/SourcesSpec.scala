@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{BenchOps, Multimodal}
-import graft.sources.{FooterMeta, ParquetKnobs, WideTableGen}
+import graft.sources.{BenchRunners, FooterMeta, ParquetKnobs, WideTableGen}
 import org.scalatest.funsuite.AnyFunSuite
 
 class SourcesSpec extends AnyFunSuite {
@@ -19,6 +19,59 @@ class SourcesSpec extends AnyFunSuite {
     assert(mm.getFloat(0) >= -1000f && mm.getFloat(1) <= 1000f)
   }
 
+  /** The generator's value contract spelled as the expression tree it
+    * replaced: one seeded `rand` per column over the same range.
+    */
+  private def randOracle(numCols: Int, numRows: Long, seed: Long, numPartitions: Int) = {
+    import org.apache.spark.sql.functions.rand
+    val (lo, hi) = (-1000.0, 1000.0)
+    val base = if (numPartitions > 0) spark.range(0L, numRows, 1L, numPartitions)
+               else spark.range(numRows)
+    base.select((0 until numCols).map(i =>
+      (rand(seed + i) * (hi - lo) + lo).cast("float").as(s"col_$i")): _*)
+  }
+
+  test("wide generator: every value equals the per-column rand expression") {
+    // (cols, rows, partitions ≤ 0 = session default, seed)
+    val shapes = Seq((25, 1000L, 0, 7L), (7, 333L, 3, 11L), (1, 100L, 0, 5L),
+      (300, 50L, 2, 42L), (4, 0L, 0, 9L))
+    for ((n, rows, parts, seed) <- shapes) {
+      val shape = s"$n cols x $rows rows / $parts partitions"
+      val got = WideTableGen.wide(spark, n, rows, seed, numPartitions = parts)
+      val want = randOracle(n, rows, seed, parts)
+      assert(got.schema === want.schema, shape)
+      assert(got.rdd.getNumPartitions === want.rdd.getNumPartitions, shape)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, shape)
+    }
+  }
+
+  test("wide generator: a 5,000-column frame writes with compiled code only") {
+    // a per-column expression tree this wide overflows the 64 KB method
+    // limit; CODEGEN_ONLY turns the silent interpreted fallback into a failure
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val path = s"$work/codegen_only_5000cols"
+    ParquetKnobs.write(WideTableGen.wide(s, 5000, 10L, 1L, numPartitions = 1), path,
+      ParquetKnobs.WriteConfig())
+    val back = s.read.parquet(path)
+    assert(back.columns.length === 5000)
+    assert(back.count() === 10)
+  }
+
+  test("a wide probe fixture left in a multi-file layout is rebuilt as one file") {
+    val dir = s"$work/stale-wide"
+    val path = s"$dir/wide_probe_40cols"
+    val conf = spark.sparkContext.hadoopConfiguration
+    // right columns and rows, but four files: the layout before single-file fixtures
+    ParquetKnobs.write(WideTableGen.wide(spark, 40, 100L, numPartitions = 4), path,
+      ParquetKnobs.WriteConfig(codec = "snappy"))
+    assert(FooterMeta.parquetFiles(conf, path).size === 4)
+    val r = BenchRunners.wideLayout(spark, 40, 100L, dir).head()
+    assert(FooterMeta.parquetFiles(conf, path).size === 1,
+      "a stale multi-file fixture must be rebuilt, not timed")
+    assert(r.getAs[Long]("num_rows") === 100L)
+  }
+
   test("writer knobs round-trip: written file reads back with same content") {
     val df = WideTableGen.wide(spark, 5, 2000L, seed = 3)
     val path = s"$work/roundtrip"
@@ -30,7 +83,8 @@ class SourcesSpec extends AnyFunSuite {
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       df.schema.fields.map(f => (f.name, f.dataType)).toSeq)
     assert(back.count() === 2000)
-    // content equality via symmetric difference (rand is deterministic per seed)
+    // content equality via symmetric difference (the generator is
+    // deterministic per seed, partition and row offset)
     assert(back.exceptAll(df).count() === 0 && df.exceptAll(back).count() === 0)
   }
 

@@ -123,4 +123,25 @@ class VectorExpressionsSpec extends AnyFunSuite {
     assert(rows.length === 3)
     assert(rows.forall(_.getSeq[Int](0).length === 2))
   }
+
+  test("ivf_pq_encode rejects a vector shorter than M x subDim on the codegen path") {
+    import graft.functions.VectorExpressions.ivf_pq_encode
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.codegen.fallback", "false")
+    s2.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    // K=2 lists over d=4, M=2 subspaces of subDim=2
+    val cents = Seq(Array(0.0, 0.0, 0.0, 0.0), Array(1.0, 1.0, 1.0, 1.0))
+    val book = Seq(Array(0.0, 0.0), Array(1.0, 1.0))
+    def encode(width: Int) = s2.range(3)
+      .selectExpr(s"array(cast(id AS double)${(2 to width).map(j => s", $j.0d").mkString}) AS v")
+      .select(ivf_pq_encode(col("v"), cents, Seq(book, book), subDim = 2, residual = false).as("e"))
+    val full = encode(4)
+    assert(full.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+    assert(full.collect().map(_.getStruct(0).getSeq[Int](1).length).toSeq === Seq(2, 2, 2))
+    val e = intercept[Exception](encode(3).collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[IllegalArgumentException]),
+      s"a short vector must fail loudly, got: $e")
+  }
 }
